@@ -128,11 +128,12 @@ def page_profiles(boxes: DataFrame, col_break_dist: float,
     The kernel is fully vectorized across each Arrow batch (lexsort by
     (page, value); segment medians picked by index arithmetic on the
     sorted values — no per-cluster Python loop) and carries the trailing
-    page across batch boundaries with the same closed-group invariant as
-    the packing kernel (operators/grid.pack_joined).
+    page across batch boundaries through the shared page-group driver
+    (operators/pagegroups), like the packing kernel.
     """
     import numpy as np
     import pandas as pd
+    from .pagegroups import map_page_groups
 
     cbd, rbd = float(col_break_dist), float(row_break_dist)
 
@@ -162,15 +163,11 @@ def page_profiles(boxes: DataFrame, col_break_dist: float,
         ends = np.append(starts[1:], n)
         return starts, ends
 
-    def _process(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = (pdf["doc_id"].astype(str) + "\x00"
-               + pdf["page"].astype(str)).to_numpy()
-        # stable page codes in arrival (partition-sorted) order
-        page_bounds = np.flatnonzero(np.concatenate(
-            [[True], key[1:] != key[:-1]]))
-        codes = np.cumsum(np.concatenate(
-            [[True], key[1:] != key[:-1]])) - 1
+    def _process(pdf: pd.DataFrame, page_bounds) -> pd.DataFrame:
+        # page codes in arrival (partition-sorted) order
         n_pages = len(page_bounds)
+        codes = np.repeat(np.arange(n_pages),
+                          np.diff(np.append(page_bounds, len(pdf))))
 
         left = pdf["left"].to_numpy(dtype=float)
         top = pdf["top"].to_numpy(dtype=float)
@@ -208,37 +205,7 @@ def page_profiles(boxes: DataFrame, col_break_dist: float,
         })
 
     def kernel(batches):
-        seen = set()
-
-        def check_and_emit(pdf):
-            keys = (pdf["doc_id"].astype(str) + "\x00"
-                    + pdf["page"].astype(str)).to_numpy()
-            cuts = np.flatnonzero(np.concatenate(
-                [[True], keys[1:] != keys[:-1]]))
-            for k in keys[cuts]:
-                if k in seen:
-                    raise RuntimeError(
-                        "page_profiles: page key %r recurred after its "
-                        "group closed — input not page-contiguous" % (k,))
-                seen.add(k)
-            return _process(pdf)
-
-        carry = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            k = (pdf["doc_id"].astype(str) + "\x00"
-                 + pdf["page"].astype(str))
-            last_key = k.iloc[-1]
-            hold = (k == last_key).to_numpy()
-            carry = pdf[hold]
-            emit = pdf[~hold]
-            if len(emit):
-                yield check_and_emit(emit)
-        if carry is not None and len(carry):
-            yield check_and_emit(carry)
+        return map_page_groups(batches, _process, "page_profiles")
 
     return src.mapInPandas(
         kernel, schema="doc_id string, page int, "

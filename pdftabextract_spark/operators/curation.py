@@ -17,22 +17,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-
-def _materialize(df: DataFrame, mode) -> DataFrame:
-    """Optional materialization for frames consumed by several downstream
-    branches (mirrors plans.pipeline._materialize): ``"persist"`` =
-    MEMORY_AND_DISK cache, ``"checkpoint"`` = lazy localCheckpoint (cuts
-    lineage, no columnar re-encode), anything falsy / ``"none"`` = no
-    reuse (each consumer recomputes the lineage). Operators default to no
-    reuse — cluster-safe, nothing pinned — and expose a ``cache=``
-    parameter so corpus-scale callers can stop a multi-consumer shingle
-    stream from re-deriving its input 2-3 times per call."""
-    if mode == "checkpoint":
-        return df.localCheckpoint(eager=False)
-    if mode == "persist":
-        from pyspark import StorageLevel
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    return df
+from . import materialize
 
 
 # ------------------------------------------------- repetition signals
@@ -205,7 +190,7 @@ def contamination(docs: DataFrame, eval_docs: DataFrame, n: int = 13,
         .select("s").distinct().withColumn("_m", F.lit(1))
     if broadcast_eval:
         ev = broadcast(ev)
-    marked = _materialize(sh.join(ev, "s", "left"), cache)
+    marked = materialize(sh.join(ev, "s", "left"), cache)
     return (marked.groupBy("doc_id")
             .agg(F.count("*").alias("n_shingles"),
                  F.count("_m").alias("contaminated"))
@@ -310,7 +295,7 @@ def boilerplate_fraction(docs: DataFrame, n: int = 8, min_docs: int = 2,
     corpus scale."""
     from .dedup import word_shingles
 
-    sh = _materialize(
+    sh = materialize(
         word_shingles(docs, n, text_col, id_col, hashed=True), cache)
     frequent = (sh.groupBy("s").agg(F.count("*").alias("_df"))
                 .where(F.col("_df") >= int(min_docs)).select("s")
@@ -368,7 +353,7 @@ def duplicate_passage_rate(docs: DataFrame, k: int = 50, text_col="text",
     grams = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size("ws") - k, F.lit(0))),
         lambda i: F.xxhash64(F.concat_ws(" ", F.slice(F.col("ws"), i + 1, k))))
-    g = _materialize(d.select("doc_id", grams.alias("gs")), cache)
+    g = materialize(d.select("doc_id", grams.alias("gs")), cache)
     wins = g.select("doc_id", F.explode("gs").alias("s"))
     ndocs = (g.select(F.explode(F.array_distinct("gs")).alias("s"))
              .groupBy("s").agg(F.count("*").alias("_nd")))

@@ -1,19 +1,16 @@
 """Grid construction + textbox->cell assignment + cell-text materialization.
 
 The assignment is the reference's interval theta-join with argmax
-(/root/reference/pdftabextract/extract.py:46-117). Two implementations:
+(/root/reference/pdftabextract/extract.py:46-117), scored per page by the
+numpy broadcast kernel (kernels.gridfit.assign_boxes_to_cells) inside
+Arrow-batched mapInPandas stages:
 
-* ``assign_cells_cogrouped`` (default): cogrouped applyInPandas over
-  (doc_id, page) — boxes and the page's border arrays meet without
-  duplicating the arrays per box; the numpy broadcast kernel
-  (kernels.gridfit) scores boxes x cells per page. Co-partitioned by the
-  page key, so the only shuffle is the groupBy exchange both inputs need
-  anyway. Skew-safe: a page is the natural unit of work (boxes-per-page is
-  bounded), group keys are (doc_id, page), never doc_id alone.
-
-* ``assign_cells_sql``: pure-SQL variant (explode cells, range-predicate
-  join, window argmax) kept for oracle cross-checking — same semantics,
-  more shuffle; used by the correctness suite, not the hot path.
+* ``assign_and_pack`` (text path): assignment and cell-text packing fused
+  into one kernel emitting one row per page; per-page groups are driven
+  by the shared page-group driver (operators/pagegroups).
+* ``assign_cells_joined`` (image path and the catalogue / schoollist
+  plans): long-form (box, row_idx, col_idx) rows, materialized onto the
+  full grid by ``cell_texts`` / ``cell_texts_lines``.
 
 Cell text parity: join_texts (textboxes.py:154-162) — sort by left (stable
 by box order), join with ' ', strip.
@@ -25,44 +22,18 @@ _ASSIGN_SCHEMA = ("doc_id string, page int, box_id int, left double, "
                   "value string, row_idx int, col_idx int")
 
 
-def assign_cells_cogrouped(boxes: DataFrame, positions: DataFrame) -> DataFrame:
-    """boxes(doc_id,page,box_id,left,top,width,height,value) x
-    positions(doc_id,page,col_positions,row_positions) ->
-    (doc_id,page,box_id,left,value,row_idx,col_idx); unmatched boxes get
-    row_idx = col_idx = -1 (the reference's unmatched_texts anti-set)."""
-    import pandas as pd
-    from ..kernels.gridfit import fit_page_boxes
-
-    def fit(key, boxes_pdf: pd.DataFrame, pos_pdf: pd.DataFrame) -> pd.DataFrame:
-        doc_id, page = key
-        if len(pos_pdf) == 0 or len(boxes_pdf) == 0:
-            return pd.DataFrame(columns=[
-                "doc_id", "page", "box_id", "left", "value", "row_idx", "col_idx"])
-        col_pos = pos_pdf.iloc[0]["col_positions"]
-        row_pos = pos_pdf.iloc[0]["row_positions"]
-        out = fit_page_boxes(boxes_pdf, col_pos, row_pos)
-        out["doc_id"] = doc_id
-        out["page"] = page
-        return out[["doc_id", "page", "box_id", "left", "value", "row_idx", "col_idx"]]
-
-    return (
-        boxes.groupBy("doc_id", "page")
-        .cogroup(positions.groupBy("doc_id", "page"))
-        .applyInPandas(fit, schema=_ASSIGN_SCHEMA)
-    )
-
-
 def assign_cells_joined(boxes: DataFrame, positions: DataFrame) -> DataFrame:
-    """Default assignment path: equi-join boxes with their page's border
-    arrays (AQE picks broadcast when positions is small — one row per
-    page), then ONE Arrow-batched mapInPandas kernel. Assignment is
-    per-box independent given the page grid, so no grouping shuffle is
-    needed at all; the kernel just sub-groups each Arrow batch by page to
-    vectorize boxes x cells scoring. ~50x fewer Python crossings than a
-    per-page applyInPandas."""
+    """Long-form assignment (ahead of ``cell_texts``/``cell_texts_lines``):
+    equi-join boxes with their page's border arrays (AQE picks broadcast
+    when positions is small — one row per page), then ONE Arrow-batched
+    mapInPandas kernel. Assignment is per-box independent given the page
+    grid, so no grouping shuffle is needed at all; the kernel just
+    sub-groups each Arrow batch by page to vectorize boxes x cells
+    scoring. ~50x fewer Python crossings than a per-page applyInPandas."""
     import numpy as np
     import pandas as pd
     from ..kernels.gridfit import assign_boxes_to_cells
+    from .pagegroups import group_starts, page_keys
 
     joined = boxes.join(
         positions.select("doc_id", "page", "col_positions", "row_positions"),
@@ -75,7 +46,7 @@ def assign_cells_joined(boxes: DataFrame, positions: DataFrame) -> DataFrame:
                 continue
             # group by page via sort + slice on numpy arrays — no per-page
             # pandas sub-frames/copies (53k pages per job add up)
-            key = (pdf["doc_id"].astype(str) + "\x00" + pdf["page"].astype(str)).to_numpy()
+            key = page_keys(pdf)
             order = np.argsort(key, kind="stable")
             l = pdf["left"].to_numpy(dtype=float)[order]
             t = pdf["top"].to_numpy(dtype=float)[order]
@@ -83,9 +54,7 @@ def assign_cells_joined(boxes: DataFrame, positions: DataFrame) -> DataFrame:
             b = t + pdf["height"].to_numpy(dtype=float)[order]
             col_pos = pdf["col_positions"].to_numpy()[order]
             row_pos = pdf["row_positions"].to_numpy()[order]
-            sorted_key = key[order]
-            bounds = np.flatnonzero(np.concatenate(
-                [[True], sorted_key[1:] != sorted_key[:-1], [True]]))
+            bounds = np.append(group_starts(key[order]), n)
             out_row = np.empty(n, dtype=np.int64)
             out_col = np.empty(n, dtype=np.int64)
             for s, e in zip(bounds[:-1], bounds[1:]):
@@ -142,8 +111,9 @@ def pack_joined(joined: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
     from ..kernels.gridfit import assign_boxes_to_cells
+    from .pagegroups import map_page_groups
 
-    def _process(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _process(pdf: pd.DataFrame, starts) -> pd.DataFrame:
         l = pdf["left"].to_numpy(dtype=float)
         t = pdf["top"].to_numpy(dtype=float)
         r = l + pdf["width"].to_numpy(dtype=float)
@@ -154,9 +124,7 @@ def pack_joined(joined: DataFrame) -> DataFrame:
         pages = pdf["page"].to_numpy()
         col_pos = pdf["col_positions"].to_numpy()
         row_pos = pdf["row_positions"].to_numpy()
-        key = pdf["_key"].to_numpy()
-        bounds = np.flatnonzero(np.concatenate(
-            [[True], key[1:] != key[:-1], [True]]))
+        bounds = np.append(starts, len(pdf))
         out = []
         for s, e in zip(bounds[:-1], bounds[1:]):
             cp = np.asarray(col_pos[s], dtype=float)
@@ -186,94 +154,11 @@ def pack_joined(joined: DataFrame) -> DataFrame:
             "doc_id", "page", "n_rows", "n_cols", "cells", "n_unmatched"])
 
     def kernel(batches):
-        # runtime contiguity invariant: the kernel closes a page group the
-        # moment a different key follows it; if a closed key ever recurs in
-        # this partition, the input was NOT page-contiguous (join reordered
-        # rows / page split across batches in a way the carry can't mend)
-        # and silent duplicate per-page rows would corrupt offsets
-        # downstream — fail loudly instead.
-        seen = set()
-
-        def check_and_emit(pdf):
-            keys = pdf["_key"].to_numpy()
-            cuts = np.flatnonzero(np.concatenate(
-                [[True], keys[1:] != keys[:-1]]))
-            for k in keys[cuts]:
-                if k in seen:
-                    raise RuntimeError(
-                        "assign_and_pack: page key %r recurred after its "
-                        "group closed — input rows are not page-contiguous "
-                        "(use page_contiguous=False to force the exchange)"
-                        % (k,))
-                seen.add(k)
-            return _process(pdf)
-
-        carry = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.assign(
-                _key=pdf["doc_id"].astype(str) + "\x00" + pdf["page"].astype(str))
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            last_key = pdf["_key"].iloc[-1]
-            hold = pdf["_key"] == last_key
-            carry = pdf[hold]
-            emit = pdf[~hold]
-            if len(emit):
-                yield check_and_emit(emit)
-        if carry is not None and len(carry):
-            yield check_and_emit(carry)
+        return map_page_groups(batches, _process, "assign_and_pack")
 
     return joined.mapInPandas(
         kernel, schema="doc_id string, page int, n_rows int, n_cols int, "
                        "cells array<string>, n_unmatched int")
-
-
-def assign_cells_sql(boxes: DataFrame, positions: DataFrame) -> DataFrame:
-    """Relational formulation: explode the grid, join on the candidate
-    range predicates, window-argmax per box. Exact same candidate and
-    tie-break semantics as the kernel."""
-    from pyspark.sql import Window as W
-
-    cells = cells_from_positions(positions)
-    b = boxes.select(
-        "doc_id", "page", "box_id", "left", "top", "value",
-        (F.col("left") + F.col("width")).alias("right"),
-        (F.col("top") + F.col("height")).alias("bottom"),
-    )
-    j = b.join(cells, ["doc_id", "page"])
-    row_ok = (
-        ((F.col("cell_t") <= F.col("top")) & (F.col("top") <= F.col("cell_b")))
-        | ((F.col("cell_t") <= F.col("bottom")) & (F.col("bottom") <= F.col("cell_b")))
-        | ((F.col("top") <= F.col("cell_t")) & (F.col("bottom") >= F.col("cell_b")))
-    )
-    col_ok = (
-        ((F.col("cell_l") <= F.col("left")) & (F.col("left") <= F.col("cell_r")))
-        | ((F.col("cell_l") <= F.col("right")) & (F.col("right") <= F.col("cell_r")))
-        | ((F.col("left") <= F.col("cell_l")) & (F.col("right") >= F.col("cell_r")))
-    )
-    ix = F.greatest(F.lit(0.0), F.least("right", "cell_r") - F.greatest("left", "cell_l"))
-    iy = F.greatest(F.lit(0.0), F.least("bottom", "cell_b") - F.greatest("top", "cell_t"))
-    box_area = (F.col("right") - F.col("left")) * (F.col("bottom") - F.col("top"))
-    cell_area = (F.col("cell_r") - F.col("cell_l")) * (F.col("cell_b") - F.col("cell_t"))
-    isect = F.least(ix * iy, F.least(box_area, cell_area)) / box_area
-    dist = F.sqrt(
-        F.pow((F.col("left") + F.col("right")) / 2 - (F.col("cell_l") + F.col("cell_r")) / 2, 2)
-        + F.pow((F.col("top") + F.col("bottom")) / 2 - (F.col("cell_t") + F.col("cell_b")) / 2, 2)
-    )
-    cand = (
-        j.where(row_ok & col_ok)
-        .withColumn("isect", isect).withColumn("dist", dist)
-        .where(F.col("isect") > 0)
-    )
-    w = W.partitionBy("doc_id", "page", "box_id").orderBy(
-        F.col("isect").desc(), F.col("dist").asc(), F.col("row_idx").asc(), F.col("col_idx").asc())
-    return (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("doc_id", "page", "box_id", "left", "value", "row_idx", "col_idx")
-    )
 
 
 def cells_from_positions(positions: DataFrame) -> DataFrame:

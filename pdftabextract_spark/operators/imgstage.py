@@ -20,6 +20,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from . import materialize
 from ..kernels import imgproc as K
 from ..kernels.raster import decode_raster
 
@@ -103,9 +104,8 @@ def find_rotation_per_page(lines: DataFrame, rot_thresh, rot_same_dir_thresh,
     enriched = lines.groupBy("doc_id", "page").applyInPandas(kernel, schema=schema)
     if persist:
         # persist accepts True (MEMORY_AND_DISK) or a PipelineParams.cache
-        # mode string — see plans.pipeline._materialize
-        from ..plans.pipeline import _materialize
-        enriched = _materialize(
+        # mode string — see operators.materialize
+        enriched = materialize(
             enriched, persist if isinstance(persist, str) else "persist")
     rotations = enriched.where(F.col("direction").isNull()).select(
         "doc_id", "page", "rot_type", "rot_radians")
@@ -174,8 +174,7 @@ def detect_lines_with_rotation(pages: DataFrame, media: DataFrame,
     schema = (_LINES_SCHEMA + ", rot_type string, rot_radians double")
     enriched = joined.mapInPandas(kernel, schema=schema)
     if persist:
-        from ..plans.pipeline import _materialize
-        enriched = _materialize(
+        enriched = materialize(
             enriched, persist if isinstance(persist, str) else "persist")
     rotations = enriched.where(F.col("direction").isNull()).select(
         "doc_id", "page", "rot_type", "rot_radians")

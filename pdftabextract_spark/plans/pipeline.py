@@ -4,27 +4,31 @@ Stages (SURVEY.md §3.4):
   scan      span table -> textbox rows + page rows (JVM-side, sources/spans)
   [image]   media_ref -> page-image bytes -> Hough lines -> rotation/skew
             repair (operators/imgstage) — optional, catalogue_30s path
-  columns   per-page 1-D clustering of box lefts (window gaps-and-islands)
-            -> exact-median centers -> corpus column model fit + per-page
-            repair (operators/model) — the ONLY corpus-wide exchange
-  rows      per-page clustering of box tops -> row borders
-  grid      borders -> cells; cogrouped numpy assignment kernel
-  output    cell texts -> full grid -> ordered result spans
+  columns   per-page 1-D clustering of box lefts, fused with the row
+  rows      clustering of box tops and the page extents in one profile
+            kernel (operators/clustering.page_profiles) -> corpus column
+            model fit + per-page repair (operators/model) — the ONLY
+            corpus-wide exchange
+  grid      borders -> cells; one Arrow kernel assigns boxes and packs
+            each page's cell texts into one row (operators/grid)
+  output    packed pages -> ordered result spans (page-level cumsums)
 
 Scale notes: every per-page stage partitions by (doc_id, page) — the unit
 of work is a page, never a whole document, which defuses pages-per-doc
 skew (north rule). The column-model fit reduces to O(distinct offsets)
 rows on the driver. All heavy expressions are JVM-side; Python runs only
-in the model-repair pandas UDF and the per-page assignment kernel.
+in the per-page Arrow kernels (profiles, model repair, assign + pack).
 """
 
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from ..operators.clustering import cluster_centers
-from ..operators.model import fit_and_repair
-from ..operators.grid import assign_cells_joined, cell_texts
+from ..operators import materialize
+from ..operators.clustering import page_profiles
+from ..operators.grid import assign_and_pack, assign_cells_joined, cell_texts
+from ..operators.model import (
+    fit_and_repair, fit_column_model_pooled, repair_page_centers)
 
 
 @dataclass(frozen=True)
@@ -58,7 +62,7 @@ class PipelineParams:
                                      # visibly serializes
     cache: str = "persist"           # reuse strategy for tables consumed
                                      # by >1 downstream branch (boxes,
-                                     # profiles, positions): "persist"
+                                     # profiles, line centers): "persist"
                                      # (MEMORY_AND_DISK columnar — the
                                      # cluster-safe default: lineage
                                      # recomputes on executor loss),
@@ -86,84 +90,6 @@ class PipelineParams:
             else self.min_col_width / 2
 
 
-def _materialize(df: DataFrame, mode: str) -> DataFrame:
-    """Materialization for frames consumed by multiple downstream
-    branches. ``checkpoint`` = localCheckpoint (lazy): caches the
-    internal rows and truncates lineage — no columnar re-encode, which
-    on this host intermittently costs 10x the scan it saves; recovery
-    on executor loss is a job retry (acceptable: the engine's jobs are
-    idempotent and externally checkpointed, plans/checkpoint.py).
-    ``persist`` = classic MEMORY_AND_DISK columnar cache (recomputable
-    lineage). ``none`` = no reuse."""
-    if mode == "checkpoint":
-        return df.localCheckpoint(eager=False)
-    if mode == "persist":
-        from pyspark import StorageLevel
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    return df
-
-
-def page_extents(boxes: DataFrame) -> DataFrame:
-    """One pass over boxes: per-page max right / max bottom (used for the
-    closing column and row borders)."""
-    return boxes.groupBy("doc_id", "page").agg(
-        F.max(F.col("left") + F.col("width")).alias("max_right"),
-        F.max(F.col("top") + F.col("height")).alias("max_bottom"))
-
-
-def column_positions(boxes: DataFrame, params: PipelineParams,
-                     extents: DataFrame = None, centers: DataFrame = None) -> DataFrame:
-    """Per-page column borders via text-left clustering + corpus model
-    repair (schoollist_2-style columns, §3.3, with the catalogue's
-    get_adjusted_cluster_centers model fit)."""
-    if centers is None:
-        centers = cluster_centers(
-            boxes, "left", params.col_break_dist, ("doc_id", "page"), center="median")
-    repaired = fit_and_repair(
-        centers, params.n_cols, params.model_break_dist,
-        same_size_use_model_arr_diff_thresh=params.same_size_use_model_arr_diff_thresh)
-
-    # borders: each repaired center - pad, then a right border safely past
-    # the last column (max box right + pad, but at least last center + 2*pad)
-    if extents is None:
-        extents = page_extents(boxes)
-    pad = float(params.pad_x)
-    return (
-        repaired.join(extents.select("doc_id", "page", "max_right"), ["doc_id", "page"])
-        .select(
-            "doc_id", "page",
-            F.concat(
-                F.transform("centers_fixed", lambda c: c - F.lit(pad)),
-                F.array(F.greatest(
-                    F.col("max_right") + F.lit(pad),
-                    F.element_at("centers_fixed", -1) + F.lit(2 * pad),
-                )),
-            ).alias("col_positions"),
-        )
-    )
-
-
-def row_positions(boxes: DataFrame, params: PipelineParams,
-                  extents: DataFrame = None) -> DataFrame:
-    """Per-page row borders: cluster box tops, border = cluster min top -
-    pad_y, closing border = page max bottom + pad_y (schoollist-style rows
-    from text borders, §3.2 step 4)."""
-    row_mins = cluster_centers(
-        boxes, "top", params.row_break_dist, ("doc_id", "page"), center="min")
-    if extents is None:
-        extents = page_extents(boxes)
-    pad = float(params.pad_y)
-    return (
-        row_mins.groupBy("doc_id", "page")
-        .agg(F.array_sort(F.collect_list(F.col("center") - F.lit(pad))).alias("_tops"))
-        .join(extents.select("doc_id", "page", "max_bottom"), ["doc_id", "page"])
-        .select(
-            "doc_id", "page",
-            F.concat("_tops", F.array(F.col("max_bottom") + F.lit(pad))).alias("row_positions"),
-        )
-    )
-
-
 def positions_fused(boxes: DataFrame, params: PipelineParams,
                     persist: bool = True) -> DataFrame:
     """Per-page (col_positions, row_positions) via the FUSED profile
@@ -174,14 +100,11 @@ def positions_fused(boxes: DataFrame, params: PipelineParams,
     instead of a second window pass, and the border assembly is pure
     array expressions on the tiny one-row-per-page frame — the 3 window/
     agg passes + 3-way join of the unfused formulation disappear."""
-    from ..operators.clustering import page_profiles
-    from ..operators.model import fit_column_model_pooled, repair_page_centers
-
     profiles = page_profiles(boxes, params.col_break_dist,
                              params.row_break_dist,
                              num_partitions=params.profile_partitions)
     if persist:
-        profiles = _materialize(profiles, params.cache)
+        profiles = materialize(profiles, params.cache)
     pooled = profiles.select(
         F.explode(F.transform(
             "col_centers",
@@ -206,16 +129,17 @@ def positions_fused(boxes: DataFrame, params: PipelineParams,
         ).alias("row_positions"))
 
 
-def extract_cells(boxes: DataFrame, params: PipelineParams,
-                  persist: bool = True, page_contiguous: bool = False) -> DataFrame:
-    """boxes -> (doc_id, page, row_idx, col_idx, cell_text) full grid.
+def extract_cells_packed(boxes: DataFrame, params: PipelineParams,
+                         persist: bool = True, page_contiguous: bool = False) -> DataFrame:
+    """boxes -> packed per-page cells (doc_id, page, n_rows, n_cols,
+    cells array row-major, n_unmatched) — the shape the span assembler
+    consumes without any further wide shuffle.
 
-    ``persist``: the exploded textbox table feeds five downstream branches
-    (column clustering, row clustering, page extents x2, assignment); at
-    any scale, one materialization beats five re-scans of the span table
-    (scan + explode + JSON parse). Per-page positions likewise feed both
-    the assignment cogroup and the full-grid generator. On a cluster this
-    is MEMORY_AND_DISK; the same call works local.
+    ``persist``: the box table feeds two branches (the profile kernel and
+    the assign + pack kernel); one materialization beats re-scanning the
+    span table (scan + explode + JSON parse) for the second. The profiles
+    are materialized inside ``positions_fused``. On a cluster this is
+    MEMORY_AND_DISK; the same call works local.
     """
     # scan-time zero-area drop (parse_pages rect validation,
     # common.py:138-141) — Catalyst pushes this into the source scan
@@ -226,13 +150,17 @@ def extract_cells(boxes: DataFrame, params: PipelineParams,
         # eager exchange + broken AQE broadcast choices downstream) than
         # the exchanges it saves; materialize unpartitioned and let AQE
         # plan each branch
-        boxes = _materialize(boxes, params.cache)
+        boxes = materialize(boxes, params.cache)
     positions = positions_fused(boxes, params, persist)
-    if persist:
-        positions = _materialize(positions, params.cache)
-    packed = assign_and_pack_from(boxes, positions, page_contiguous)
-    # long form for callers/tests; pure JVM explode off the packed rows —
-    # no shuffle (the packed kernel already did the heavy lifting)
+    return assign_and_pack(boxes, positions, page_contiguous)
+
+
+def extract_cells(boxes: DataFrame, params: PipelineParams,
+                  persist: bool = True, page_contiguous: bool = False) -> DataFrame:
+    """boxes -> (doc_id, page, row_idx, col_idx, cell_text) full grid:
+    the long form of ``extract_cells_packed``, a pure JVM posexplode off
+    the packed rows (no shuffle)."""
+    packed = extract_cells_packed(boxes, params, persist, page_contiguous)
     return (packed.select(
         "doc_id", "page", "n_cols",
         F.posexplode("cells").alias("pos", "cell_text"))
@@ -240,24 +168,6 @@ def extract_cells(boxes: DataFrame, params: PipelineParams,
                 (F.col("pos") / F.col("n_cols")).cast("int").alias("row_idx"),
                 (F.col("pos") % F.col("n_cols")).cast("int").alias("col_idx"),
                 "cell_text"))
-
-
-def extract_cells_packed(boxes: DataFrame, params: PipelineParams,
-                         persist: bool = True, page_contiguous: bool = False) -> DataFrame:
-    """Like extract_cells but returns the packed per-page form
-    (doc_id, page, n_rows, n_cols, cells array, n_unmatched) — the shape
-    the span assembler consumes without any further wide shuffle."""
-    boxes = boxes.where((F.col("width") > 0) & (F.col("height") > 0))
-    if persist:
-        boxes = _materialize(boxes, params.cache)
-    positions = positions_fused(boxes, params, persist)
-    return assign_and_pack_from(boxes, positions, page_contiguous)
-
-
-def assign_and_pack_from(boxes: DataFrame, positions: DataFrame,
-                         page_contiguous: bool = False) -> DataFrame:
-    from ..operators.grid import assign_and_pack
-    return assign_and_pack(boxes, positions, page_contiguous)
 
 
 def extract_cells_image_path(boxes: DataFrame, pages: DataFrame,
@@ -273,7 +183,6 @@ def extract_cells_image_path(boxes: DataFrame, pages: DataFrame,
     from ..operators.imgstage import (
         detect_lines_with_rotation, apply_rotation_to_lines,
         rotate_boxes_back, line_border_centers)
-    from ..operators.model import fit_and_repair
 
     boxes = boxes.where((F.col("width") > 0) & (F.col("height") > 0))
     # fused decode + Canny + Hough + per-page rotation decision in ONE
@@ -290,7 +199,7 @@ def extract_cells_image_path(boxes: DataFrame, pages: DataFrame,
 
     boxes_fixed = rotate_boxes_back(boxes, rotations)
     if persist:
-        boxes_fixed = _materialize(boxes_fixed, params.cache)
+        boxes_fixed = materialize(boxes_fixed, params.cache)
 
     lines_fixed = apply_rotation_to_lines(filtered)
 
@@ -300,7 +209,7 @@ def extract_cells_image_path(boxes: DataFrame, pages: DataFrame,
     centers = line_border_centers(lines_fixed, pages, "v", params.col_break_dist)
     if persist:
         # consumed twice: the model-fit probe action and the repair join
-        centers = _materialize(centers, params.cache)
+        centers = materialize(centers, params.cache)
     repaired = fit_and_repair(
         centers, params.n_cols + 1, params.model_break_dist,
         same_size_use_model_arr_diff_thresh=params.same_size_use_model_arr_diff_thresh)
@@ -313,7 +222,6 @@ def extract_cells_image_path(boxes: DataFrame, pages: DataFrame,
     # box table). row_tops = break-dist cluster MIN tops, identical to
     # row_positions' center="min" clustering (fused-vs-window parity is
     # property-tested); the kernel's col medians ride along unused.
-    from ..operators.clustering import page_profiles
     prof = page_profiles(boxes_fixed, params.col_break_dist,
                          params.row_break_dist,
                          num_partitions=params.profile_partitions)
@@ -325,42 +233,8 @@ def extract_cells_image_path(boxes: DataFrame, pages: DataFrame,
             F.array(F.col("max_bottom") + F.lit(pad_y))
         ).alias("row_positions"))
     positions = cols.join(rows, ["doc_id", "page"])
-    from ..operators.grid import assign_cells_joined
     assigned = assign_cells_joined(boxes_fixed, positions)
     return cell_texts(assigned, positions)
-
-
-def result_spans(cells: DataFrame, pages: DataFrame = None) -> DataFrame:
-    """Cells -> ordered output spans per doc:
-    per page ascending, optional image span (from ``pages`` media_ref),
-    then text spans in row-major cell order; offset = dense sequence."""
-    text_spans = cells.select(
-        "doc_id", "page",
-        F.lit("text").alias("kind"),
-        F.col("cell_text").alias("text"),
-        F.lit(None).cast("string").alias("media_ref"),
-        F.col("row_idx"), F.col("col_idx"),
-        F.lit(1).alias("_k"),  # after the image span of the same page
-    )
-    if pages is not None:
-        image_spans = pages.select(
-            "doc_id", "page",
-            F.lit("image").alias("kind"),
-            F.lit(None).cast("string").alias("text"),
-            F.col("media_ref"),
-            F.lit(-1).alias("row_idx"), F.lit(-1).alias("col_idx"),
-            F.lit(0).alias("_k"),
-        ).where(F.col("media_ref").isNotNull())
-        all_spans = text_spans.unionByName(image_spans)
-    else:
-        all_spans = text_spans
-
-    w = W.partitionBy("doc_id").orderBy("page", "_k", "row_idx", "col_idx")
-    return (
-        all_spans
-        .withColumn("offset", F.row_number().over(w) - 1)
-        .select("doc_id", "kind", "text", "media_ref", "offset")
-    )
 
 
 def result_spans_packed(packed: DataFrame, pages: DataFrame = None) -> DataFrame:

@@ -48,7 +48,8 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    spark = get_spark(app_name="oracle-check", cores=8, shuffle_partitions=8)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    spark = get_spark(app_name="oracle-check", cores=cores, shuffle_partitions=8)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
